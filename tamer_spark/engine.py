@@ -17,9 +17,10 @@ This is the Spark re-expression of the reference runtime
   The reference makes {data produce, offset commit, state produce} a single
   Kafka transaction (Tamer.scala:150-186); Spark cannot span a sink write and
   a state write in one transaction, so we use **epoch idempotence**: state
-  ``(epoch+1, new_state)`` is committed only *after* the sink commit, and a
-  crash in between replays the epoch against an idempotent sink — the same
-  exactly-once observable behavior.
+  ``(epoch+1, new_state)`` is committed only *after* the sink commit, by the
+  single rename in ``StateStore.commit``. A crash anywhere before that rename
+  replays the epoch against an idempotent sink; after it, the loop resumes at
+  the next epoch — the same exactly-once observable behavior.
 
 Unlike the reference there is no in-process bounded queue between source and
 sink fibers (Tamer.scala:333): the DataFrame *is* the batch, executors do the
@@ -153,8 +154,9 @@ class Pipeline:
                 rows = self._write_with_retry(df, doc.epoch)
             t2 = time.monotonic()
             progressed = new_state != doc.state or rows > 0
-            # Commit AFTER the sink write: crash before this line replays the
-            # epoch against the idempotent sink → exactly-once observable.
+            # Commit AFTER the sink write. The store's rename is the single
+            # commit point: a crash before it replays the epoch against the
+            # idempotent sink → exactly-once observable.
             doc = store.commit(doc.epoch + 1, new_state)
             if self.observer:
                 self.observer(BatchMetrics(doc.epoch - 1, rows, t1 - t0, t2 - t1))

@@ -3,6 +3,7 @@ Kafka plus Parquet/memory/console, all honoring the per-epoch idempotence
 contract required by the engine loop (see engine.py docstring)."""
 
 from tamer_spark.sinks.base import ConsoleSink, MemorySink, ParquetEpochSink
+from tamer_spark.sinks.kafka import KafkaSink, TransactionalKafkaSink
 from tamer_spark.sinks.shards import (
     assign_shard,
     shard_diff,
@@ -15,16 +16,11 @@ __all__ = [
     "ParquetEpochSink",
     "MemorySink",
     "ConsoleSink",
+    "KafkaSink",
+    "TransactionalKafkaSink",
     "assign_shard",
     "shard_manifest",
     "verify_shards",
     "shard_diff",
     "write_training_shards",
 ]
-
-try:  # Kafka sinks need the spark-sql-kafka package / a Kafka client at write time
-    from tamer_spark.sinks.kafka import KafkaSink, TransactionalKafkaSink  # noqa: F401
-
-    __all__ += ["KafkaSink", "TransactionalKafkaSink"]
-except Exception:  # pragma: no cover
-    pass

@@ -54,35 +54,33 @@ from pyspark.sql import DataFrame
 class KafkaSink:
     """At-least-once Kafka batch sink (Spark connector path).
 
-    Requires ``spark-sql-kafka-0-10`` on the classpath; import is gated in
-    ``tamer_spark.sinks``. The DataFrame must carry the Kafka sink schema
-    (``key``, ``value``, optionally ``topic/partition/headers/timestamp``) —
-    produced by :func:`tamer_spark.operators.records.to_records`.
+    Requires ``spark-sql-kafka-0-10`` on the classpath at write time. The
+    DataFrame must carry the Kafka sink schema (``key``, ``value``,
+    optionally ``topic/partition/headers/timestamp``) — produced by
+    :func:`tamer_spark.operators.records.to_records`.
 
     Idempotent producers stop broker-retry duplicates; they do NOT stop
     epoch-replay duplicates. To make the documented downstream dedup on
     (epoch, key) actually implementable, ``write`` stamps the epoch into a
-    ``tamer.epoch`` record header (``epoch_header=False`` to disable) —
-    consumers drop records whose (epoch, key) they have already seen. For
-    true exactly-once use :class:`TransactionalKafkaSink`.
+    ``tamer.epoch`` record header — consumers drop records whose (epoch,
+    key) they have already seen. For true exactly-once use
+    :class:`TransactionalKafkaSink`.
     """
 
     bootstrap_servers: str
     topic: str
-    epoch_header: bool = True
 
     def write(self, df: DataFrame, epoch: int) -> None:
         from pyspark.sql import functions as F
 
-        if self.epoch_header:
-            tag = F.struct(
-                F.lit("tamer.epoch").alias("key"),
-                F.encode(F.lit(str(epoch)), "UTF-8").alias("value"),
-            )
-            if "headers" in df.columns:
-                df = df.withColumn("headers", F.array_append(F.col("headers"), tag))
-            else:
-                df = df.withColumn("headers", F.array(tag))
+        tag = F.struct(
+            F.lit("tamer.epoch").alias("key"),
+            F.encode(F.lit(str(epoch)), "UTF-8").alias("value"),
+        )
+        if "headers" in df.columns:
+            df = df.withColumn("headers", F.array_append(F.col("headers"), tag))
+        else:
+            df = df.withColumn("headers", F.array(tag))
         (
             df.write.format("kafka")
             .option("kafka.bootstrap.servers", self.bootstrap_servers)
@@ -182,10 +180,6 @@ class TransactionalKafkaSink:
     #: between a crash and its replay invalidates committed markers, so
     #: treat it like the topic name (configuration, not tuning)
     num_partitions: int = 16
-    #: True → run the transaction protocol driver-side over collect(), as a
-    #: single partition. For tests (shared fake broker state) and tiny
-    #: batches; production writes stay distributed.
-    local_mode: bool = False
     #: filled per write() with (partition_id, rows_sent) for observability
     last_result: list = field(default_factory=list)
 
@@ -233,9 +227,6 @@ class TransactionalKafkaSink:
                 ),
             )
 
-        if self.local_mode:
-            self.last_result = list(run(0, iter(df.collect())))
-            return
         from pyspark.sql import functions as F
 
         # Deterministic row→partition mapping (see class docstring): replays

@@ -160,6 +160,35 @@ class S3Lister:
         return f"s3a://{self.bucket}/{key}"
 
 
+def _pages(lister: Lister, prefix: str, start_after: str | None):
+    """Page through ``lister`` via ``start_after`` until exhausted — without
+    this, a lister capped at N keys/page (every real object store) would
+    never surface keys past the first page and a cursor would stall at key
+    N+1 forever. A lister that ignores ``start_after`` (returns a page that
+    doesn't advance past it) ends the listing after that page instead of
+    looping forever."""
+    while True:
+        page = lister.list_keys(prefix, start_after=start_after)
+        if not page:
+            return
+        yield page
+        if start_after is not None and page[-1] <= start_after:
+            return  # lister ignored start_after — no forward progress
+        start_after = page[-1]
+
+
+def _read(
+    spark: SparkSession,
+    uri: str,
+    read_object: Callable[[SparkSession, str], DataFrame] | None,
+    decode: Callable[[DataFrame], DataFrame] | None,
+) -> DataFrame:
+    """One object as a DataFrame: ``read_object`` or ``spark.read.text``
+    (utf8 + splitLines, S3Setup.scala:133), then the caller's ``decode``."""
+    df = read_object(spark, uri) if read_object is not None else spark.read.text(uri)
+    return decode(df) if decode is not None else df
+
+
 # ---------------------------------------------------------------------------
 # engine sources
 # ---------------------------------------------------------------------------
@@ -203,34 +232,10 @@ class ObjectCursorSource:
         init = self.initial_instant.isoformat() if self.cursor_kind == "instant" else self.initial_number
         return fingerprint("object-cursor", self.prefix, self.cursor_kind, self.fmt, init)
 
-    def _pages(self, start_after: str | None):
-        """Page through the lister via ``start_after`` until exhausted —
-        without this, a lister capped at N keys/page (every real object
-        store) would never surface keys past the first page and the cursor
-        would stall at key N+1 forever.
-
-        Defensive stops: a lister whose ``list_keys`` doesn't take
-        ``start_after`` (pre-pagination implementations) degrades to its
-        single capped page, and a lister that accepts-but-ignores the
-        argument (returns a page that doesn't advance past it) terminates
-        after that page instead of looping forever."""
-        while True:
-            try:
-                page = self.lister.list_keys(self.prefix, start_after=start_after)
-            except TypeError:
-                yield self.lister.list_keys(self.prefix)
-                return
-            if not page:
-                return
-            yield page
-            if start_after is not None and page[-1] <= start_after:
-                return  # lister ignored start_after — no forward progress
-            start_after = page[-1]
-
     def _key_for(self, cursor, last_key: str | None = None) -> str | None:
         start_after = last_key if self.monotonic_keys else None
         best_key, best_val = None, None
-        for page in self._pages(start_after):
+        for page in _pages(self.lister, self.prefix, start_after):
             for k in page:
                 val = (
                     parse_instant_from_key(k, self.prefix, self.fmt)
@@ -254,14 +259,7 @@ class ObjectCursorSource:
         key = self._key_for(cursor, state.get("last_key"))
         if key is None:
             return None, state  # no new object yet — poll (non-blocking)
-        uri = self.lister.object_uri(key)
-        df = (
-            self.read_object(spark, uri)
-            if self.read_object is not None
-            else spark.read.text(uri)  # utf8 + splitLines (S3Setup.scala:133)
-        )
-        if self.decode is not None:
-            df = self.decode(df)
+        df = _read(spark, self.lister.object_uri(key), self.read_object, self.decode)
         if self.cursor_kind == "instant":
             new_cursor = parse_instant_from_key(key, self.prefix, self.fmt).isoformat()
         else:
@@ -347,30 +345,18 @@ class OciObjectStorageSource:
         return objects_cursor(start_after=state["start_after"], current=None)
 
     def _next_name(self, start_after: str | None) -> str | None:
-        while True:
-            page = self.lister.list_keys(self.prefix, start_after=start_after)
-            if not page:
-                return None
+        for page in _pages(self.lister, self.prefix, start_after):
             for name in page:
                 if self.object_name_finder(name):
                     return name
-            if start_after is not None and page[-1] <= start_after:
-                return None  # lister ignored start_after — no forward progress
-            start_after = page[-1]
+        return None
 
     def iteration(self, state: Any, spark: SparkSession) -> tuple[DataFrame | None, Any]:
         next_name = self._next_name(self.start_after(state))
         current = self.object_name(state)
         df = None
         if current is not None:
-            uri = self.lister.object_uri(current)
-            df = (
-                self.read_object(spark, uri)
-                if self.read_object is not None
-                else spark.read.text(uri)
-            )
-            if self.decode is not None:
-                df = self.decode(df)
+            df = _read(spark, self.lister.object_uri(current), self.read_object, self.decode)
         fold = self.state_fold or self._default_fold
         new_state = fold(state, next_name)
         if df is None and new_state == state:

@@ -12,8 +12,11 @@ Here the same contract is a checkpoint directory holding one JSON document::
 
     {fingerprint, group_id, epoch, state, updated_at}
 
-committed via atomic rename (write tmp + ``os.replace``), plus a history of
-superseded docs for debugging. Semantics preserved:
+Like the compacted topic, only the latest doc is kept. A commit writes and
+fsyncs ``state.json.tmp``, then renames it over ``state.json`` with
+``os.replace``. That one rename is the single commit point: a crash at any
+instruction leaves either the previous doc or the new one, never neither.
+Semantics preserved:
 
 - fingerprint mismatch on resume → hard :class:`StateForkError` (never
   silently consume another pipeline's state),
@@ -127,7 +130,7 @@ class StateStore:
         return doc
 
     def commit(self, epoch: int, new_state: Any) -> StateDoc:
-        """Atomically publish ``(epoch, new_state)``; keeps prior doc in history."""
+        """Atomically publish ``(epoch, new_state)``, replacing the prior doc."""
         doc = StateDoc(self.fingerprint, self.group_id, epoch, new_state, time.time())
         self._commit(doc)
         return doc
@@ -138,10 +141,10 @@ class StateStore:
             f.write(doc.to_json())
             f.flush()
             os.fsync(f.fileno())
-        # history of superseded states (the compacted topic keeps only the
-        # latest per key; we keep a small debug trail instead)
-        hist_dir = os.path.join(self.dir, "history")
-        os.makedirs(hist_dir, exist_ok=True)
-        if os.path.exists(self.path):
-            os.replace(self.path, os.path.join(hist_dir, f"state-{int(doc.updated_at*1000)}.json"))
-        os.replace(tmp, self.path)
+        os.replace(tmp, self.path)  # the commit point
+        # make the rename itself durable: it lives in the directory entry
+        fd = os.open(self.dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)

@@ -12,6 +12,7 @@ What must hold for exactly-once (reference: Tamer.scala:150-186):
 
 from __future__ import annotations
 
+import os
 from collections import namedtuple
 
 import pytest
@@ -190,73 +191,111 @@ def test_sink_runs_one_transaction_per_rdd_partition(spark):
     assert sorted(sink.last_result) == first
 
 
-def _txn_sink(broker, fail_after=None):
-    calls = {"n": 0}
-
-    def factory(config):
-        fa = None
-        if fail_after is not None and calls["n"] in fail_after:
-            fa = fail_after[calls["n"]]
-        calls["n"] += 1
-        return FakeProducer(broker, config, fail_after=fa)
-
-    return TransactionalKafkaSink(
-        bootstrap_servers="fake:9092",
-        topic="t",
-        fingerprint="pipe1",
-        producer_factory=factory,
-        marker_exists=broker.marker_exists,
-        local_mode=True,
-    )
-
-
-def _records_source_df(spark, i):
-    return spark.createDataFrame([(f"k{i}".encode(), f"v{i}".encode())], "key binary, value binary")
-
-
 def test_engine_with_transactional_sink_exactly_once(spark, tmp_path):
-    """End-to-end: engine loop + transactional Kafka sink delivers each
+    """End-to-end: engine loop + transactional Kafka sink on the production
+    path (keyed repartition, one transaction per executor task) delivers each
     record exactly once through crashes at BOTH crash boundaries —
     (a) sink write fails mid-transaction (abort + engine retry),
     (b) crash after sink commit but before state commit (replay skipped via
-    the committed epoch marker)."""
+    the committed epoch markers).
+
+    The broker is file-backed because Spark's Python workers are separate
+    processes; for the same reason the one-shot failure is a flag file named
+    after the transactional id, not a counter."""
+    from pyspark.sql import functions as F
+
+    from perfbench.fakebroker import FileBroker
     from tamer_spark.engine import Pipeline, RetryPolicy
     from tamer_spark.state import fingerprint as fp
 
-    broker = FakeBroker()
+    broker = FileBroker(str(tmp_path / "broker"))
+    flags = tmp_path / "fail-once"
+    flags.mkdir()
+    parts = 4
+    schema = "key binary, value binary"
 
     class Src:
-        def __init__(self, limit=6):
-            self.limit = limit
-
         def initial_state(self):
             return 0
 
         def state_fingerprint(self):
-            return fp("kafka-e2e", self.limit)
+            return fp("kafka-e2e", 6)
 
         def iteration(self, state, spark_):
-            if state >= self.limit:
+            if state >= 6:
                 return None, state
             i = state + 1
-            return _records_source_df(spark_, i), i
+            return spark_.createDataFrame([(f"k{i}".encode(), f"v{i}".encode())], schema), i
 
-    # (a) first producer build for epoch 2 fails mid-produce → abort → retry
-    sink = _txn_sink(broker, fail_after={2: 0})  # 3rd producer (epoch 2) dies at first produce
-    pipe = Pipeline(Src(), sink, str(tmp_path / "cp"), retry=RetryPolicy(retries=3, base_delay_s=0.0))
+    def factory(config):
+        producer = broker(config)
+        try:
+            os.remove(os.path.join(flags, config["transactional.id"]))
+        except FileNotFoundError:
+            return producer
+        produce = producer.produce
+
+        def fail_on_marker(topic, key=None, value=None):
+            if topic.endswith(".epochs"):  # data sent, marker not: mid-transaction
+                raise RuntimeError("injected mid-transaction failure")
+            produce(topic, key=key, value=value)
+
+        producer.produce = fail_on_marker
+        return producer
+
+    receipts = {}
+
+    class Receipts:
+        """Keeps every write's (partition, rows sent) receipt by epoch."""
+
+        def __init__(self, sink):
+            self.sink = sink
+
+        def write(self, df, epoch):
+            self.sink.write(df, epoch)
+            receipts[epoch] = sorted(self.sink.last_result)
+
+    def sink():
+        return Receipts(
+            TransactionalKafkaSink(
+                bootstrap_servers="fake:9092",
+                topic="t",
+                fingerprint="pipe1",
+                producer_factory=factory,
+                marker_exists=broker.marker_exists,
+                num_partitions=parts,
+            )
+        )
+
+    # (a) epoch 2 carries k3; its partition's first producer dies between
+    # the data record and the marker → abort → engine retries the write
+    (pid,) = (
+        spark.createDataFrame([(b"k3", b"v3")], schema)
+        .repartition(parts, F.col("key"))
+        .rdd.mapPartitionsWithIndex(lambda i, rows: [i for _ in rows])
+        .collect()
+    )
+    flag = flags / transactional_id("pipe1", 2, pid)
+    flag.touch()
+    cp = str(tmp_path / "cp")
+    pipe = Pipeline(Src(), sink(), cp, retry=RetryPolicy(retries=3, base_delay_s=0.0))
     pipe.run(spark, until=lambda s: s >= 3)
+    assert not flag.exists()  # the failure was injected and consumed
+    # the aborted attempt's k3 sits in the log, invisible to read_committed
+    assert sum(k == b"k3" for k, _ in broker.read("t", read_committed=False)) == 2
 
     # (b) roll the checkpoint back one epoch (crash before state commit);
-    # the replayed epoch must be skipped by its marker, not re-appended
+    # the replayed epoch must be skipped by its markers, not re-appended
     store = pipe._store()
     doc = store.load()
     store.commit(doc.epoch - 1, doc.state - 1)
-    sink2 = _txn_sink(broker)
-    Pipeline(Src(), sink2, str(tmp_path / "cp")).run(spark, until=lambda s: s >= 6)
-    assert any(n == -1 for _, n in sink2.last_result or []) or True  # receipt of final epoch
+    receipts.clear()
+    Pipeline(Src(), sink(), cp).run(spark, until=lambda s: s >= 6)
+    assert receipts[2] == [(p, -1) for p in range(parts)]  # every partition skipped
+    assert sorted(receipts) == [2, 3, 4, 5]
 
-    keys = sorted(k.decode() for k, _ in broker.committed["t"])
+    keys = sorted(k.decode() for k, _ in broker.read("t"))
     assert keys == [f"k{i}" for i in range(1, 7)], keys  # exactly once each
     # one marker per committed (epoch, partition), never duplicated
-    marker_keys = [k for k, _ in broker.committed["t.epochs"]]
-    assert len(marker_keys) == len(set(marker_keys))
+    marker_keys = [k for k, _ in broker.read("t.epochs")]
+    assert len(marker_keys) == len(set(marker_keys)) == 6 * parts

@@ -81,6 +81,28 @@ def test_object_cursor_pages_past_listing_cap(spark, tmp_path):
     assert [r.value for r in sink.rows] == [f"obj{n}" for n in range(1, 8)]
 
 
+def test_object_cursor_lister_error_propagates(tmp_path):
+    """A TypeError raised inside a lister is a real failure: the cursor must
+    raise it, not fall back to the first page and report "no new object"
+    forever."""
+    root = tmp_path / "bucket5"
+    (root / "d").mkdir(parents=True)
+    for n in range(1, 6):
+        (root / "d" / f"k{n}").write_text(f"obj{n}\n")
+
+    class BrokenSecondPage(LocalFSLister):
+        def list_keys(self, prefix, start_after=None):
+            if start_after is not None:
+                raise TypeError("lister bug on page 2")
+            return super().list_keys(prefix, start_after)
+
+    src = ObjectCursorSource(
+        lister=BrokenSecondPage(str(root), max_keys=2), prefix="d/k", cursor_kind="number"
+    )
+    with pytest.raises(TypeError, match="page 2"):
+        src.iteration({"cursor": 2}, spark=None)  # the next object is on page 2
+
+
 def test_object_cursor_monotonic_fastpath_resumes_from_last_key(spark, tmp_path):
     """Zero-padded keys: monotonic_keys=True lists from the last consumed key
     (O(1) per iteration) and still consumes everything in order."""
